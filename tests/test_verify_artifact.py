@@ -190,3 +190,29 @@ def test_default_stamp_root_is_cwd_independent(tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     assert source_identity_sha256() == at_repo
     assert source_identity_sha256() == source_identity_sha256(_ROOT)
+
+
+def test_check_complete_rejects_non_stamp_report(tmp_path, capsys):
+    """A round report saved under a VERIFY_r{N}.json name (pass counts
+    and a test log, no per-query map) is not a stamp: the gate stays
+    red and names the file once instead of listing every registered
+    query as absent."""
+    import json
+
+    sys.path.insert(0, _ROOT)
+    from tools.verify_oracle import check_complete
+
+    report = {
+        "compile_ok": True,
+        "tests_ok": True,
+        "entry_ok": True,
+        "n_queries": 50,
+        "n_correct": 50,
+        "test_tail": "..... [100%]\n",
+    }
+    path = tmp_path / "VERIFY_r99.json"
+    path.write_text(json.dumps(report))
+    assert check_complete(str(path)) == 1
+    out = capsys.readouterr().out
+    assert out.startswith("NOT-A-STAMP: ")
+    assert "INCOMPLETE" not in out

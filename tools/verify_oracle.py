@@ -143,10 +143,18 @@ def check_complete(artifact_path: str) -> int:
 
     with open(artifact_path) as fh:
         artifact = json.load(fh)
+    if "queries" not in artifact:
+        # Some other report saved under the stamp name: say so once
+        # instead of listing every registered query as missing.
+        print(
+            f"NOT-A-STAMP: {artifact_path} has no per-query results "
+            f"(keys: {', '.join(sorted(artifact))})"
+        )
+        return 1
     root = os.path.dirname(os.path.abspath(artifact_path))
     stamped_sha = artifact.get("source_sha256")
     current_sha = source_identity_sha256(root)
-    recorded = set(artifact.get("queries", {}))
+    recorded = set(artifact["queries"])
     registered = set(E.queries())
     oracles = set(E.oracle_sql())
     missing = sorted(registered - recorded)
