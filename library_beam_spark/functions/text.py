@@ -168,13 +168,6 @@ def lang_id(col: Column) -> Column:
     return out
 
 
-def doc_fingerprint(col: Column) -> Column:
-    """Document fingerprint: md5 of dedup-normalized text. Engine-portable
-    (DuckDB computes the identical value — oracle-checkable), uniform, and
-    join-friendly."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
-
-
 def reference_pair(left: Column, right: Column) -> Column:
     """F9: the co-occurrence pair token ``subjRef|objRef`` with spaces
     underscored (main.py:624-633)."""

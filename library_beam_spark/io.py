@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-from datetime import date, datetime
+from datetime import date
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -219,12 +219,3 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def json_serialize_dates(rec: dict) -> dict:
-    """F6/P5 helper for tests: ISO-serialize date/datetime values
-    (main.py:95-104)."""
-    return {
-        k: (v.isoformat() if isinstance(v, (date, datetime)) else v)
-        for k, v in rec.items()
-    }

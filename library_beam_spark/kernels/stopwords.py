@@ -87,15 +87,6 @@ SHORT_MATCH_CASE_SENSITIVE_CATEGORIES = frozenset(
 )
 
 
-def load_stoplist(path: str | None = None) -> frozenset[str]:
-    """Swap in a full corpus from a one-word-per-line file (the deploy
-    path for the reference's 770-word ES list / Brown corpus)."""
-    if path is None:
-        return STOPLIST
-    with open(path, encoding="utf-8") as f:
-        return frozenset(w.strip() for w in f if w.strip())
-
-
 # Nouns ending in -ly: the known collisions of any "-ly is an adverb"
 # suffix heuristic (consumed by kernels/chunker and nlp_ops POS).
 LY_NOUNS = frozenset(

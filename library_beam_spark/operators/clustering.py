@@ -105,49 +105,16 @@ def connected_components(
     # identity-label build (a distinct EXCHANGE over the edge list) plus
     # round 0's edge⋈labels join with a single map-side-partial
     # aggregation over the cached edges.
-    # SPARK_GRAFT_ROUND0_FOLD=0 is the measurement escape hatch (the
-    # pre-r15 identity-label + join round 0) for A/B harnesses.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ROUND0_FOLD", "1") == "0":
-        identity = (
-            e.select(F.col("u").alias("node"))
-            .distinct()
-            .withColumn("component", F.col("node"))
-            .localCheckpoint(eager=True)
+    labels0 = (
+        e.groupBy("u")
+        .agg(F.min("v").alias("_nbr"))
+        .select(
+            F.col("u").alias("node"),
+            F.least("u", "_nbr").alias("component"),
+            (F.col("_nbr") < F.col("u")).alias("_changed"),
         )
-        nbr_min0 = (
-            e.join(
-                identity.select(F.col("node").alias("v"), "component"), "v"
-            )
-            .groupBy("u")
-            .agg(F.min("component").alias("_nbr"))
-            .select(F.col("u").alias("node"), "_nbr")
-        )
-        labels0 = (
-            identity.join(nbr_min0, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "component", F.coalesce("_nbr", "component")
-                ).alias("component"),
-                F.col("component").alias("_old"),
-            )
-            .withColumn("_changed", F.col("component") < F.col("_old"))
-            .drop("_old")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        labels0 = (
-            e.groupBy("u")
-            .agg(F.min("v").alias("_nbr"))
-            .select(
-                F.col("u").alias("node"),
-                F.least("u", "_nbr").alias("component"),
-                (F.col("_nbr") < F.col("u")).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        .localCheckpoint(eager=True)
+    )
     stable = labels0.filter("_changed").isEmpty()
     labels = labels0.drop("_changed")
     if stable:
@@ -300,27 +267,13 @@ def label_propagation(
     # distinct EXCHANGE over the edge list) plus the first round's
     # edge⋈labels join and two-level vote aggregation with a single
     # map-side-partial aggregation over the cached edges.
-    # SPARK_GRAFT_ROUND0_FOLD=0: measurement escape hatch (pre-r15
-    # identity-label + vote-join first round) for A/B harnesses.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_ROUND0_FOLD", "1") == "0":
-        labels = (
-            e.select(F.col("u").alias("node"))
-            .distinct()
-            .withColumn("community", F.col("node"))
-            .localCheckpoint(eager=True)
-        )
-        remaining = iters
-    else:
-        labels = (
-            e.groupBy("u")
-            .agg(F.min("v").alias("community"))
-            .select(F.col("u").alias("node"), "community")
-            .localCheckpoint(eager=True)
-        )
-        remaining = iters - 1
-    for _ in range(remaining):
+    labels = (
+        e.groupBy("u")
+        .agg(F.min("v").alias("community"))
+        .select(F.col("u").alias("node"), "community")
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(iters - 1):
         votes = (
             e.join(
                 labels.select(F.col("node").alias("v"), "community"), "v"

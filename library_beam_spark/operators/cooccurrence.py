@@ -22,32 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import reference_pair
-
-
-def relation_pairs(
-    concepts: DataFrame,
-    subject_ref: str = "subject_ref",
-    object_ref: str = "object_ref",
-) -> DataFrame:
-    """Materialize directed + undirected pair tokens per concept row —
-    the split-stage enrichment of main.py:624-633. ``undirected`` holds
-    both orders, exactly as the reference emits them."""
-    s, o = F.col(subject_ref), F.col(object_ref)
-    return concepts.withColumn("directed", F.array(reference_pair(s, o))).withColumn(
-        "undirected", F.array(reference_pair(s, o), reference_pair(o, s))
-    )
-
-
-def pair_counts(df: DataFrame, pair_col: str = "directed") -> DataFrame:
-    """Term-agg over pair tokens: explode → groupBy → count (the ES
-    fielddata aggregation re-expressed; partial agg map-side)."""
-    return (
-        df.select(F.explode(pair_col).alias("pair"))
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
 
 def cooccurrence_counts(
     mentions: DataFrame,

@@ -29,8 +29,7 @@ for packing). See operators/bpe.py for the merge-based alternative.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # Scaled −log p costs. Single characters are always available at
 # CHAR_COST (the unigram model's character fallback keeps every string
@@ -53,18 +52,6 @@ VOCAB: dict[str, int] = {
 }
 MAX_PIECE = 4
 UNREACHABLE = 10**9
-
-
-def _piece_cost_case(piece: Column, width: int) -> Column | None:
-    """CASE chain mapping a ``width``-char piece to its VOCAB cost
-    (NULL when absent) — ANSI-safe on both engines (no map element_at)."""
-    by_len = sorted((p, c) for p, c in VOCAB.items() if len(p) == width)
-    if not by_len:
-        return None
-    expr: Column = F.lit(None).cast("bigint")
-    for p, c in by_len:
-        expr = F.when(piece == F.lit(p), F.lit(c)).otherwise(expr)
-    return expr
 
 
 def viterbi_word_costs(

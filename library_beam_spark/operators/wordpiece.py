@@ -50,7 +50,7 @@ left, right).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Root pieces (word-initial) and continuation pieces (## interior),
@@ -71,21 +71,6 @@ MAX_PIECE = 4
 # real WordPiece rejects the WHOLE word when any position matches no
 # piece — with this char set, any digit poisons its word
 CHAR_VOCAB: list[str] = sorted("abcdefghijklmnopqrstuvwxyz")
-
-
-def _match_case(
-    piece: Column,
-    width: int,
-    cont: bool,
-    root_pieces: list[str] | None = None,
-    cont_pieces: list[str] | None = None,
-) -> Column | None:
-    roots = ROOT_PIECES if root_pieces is None else root_pieces
-    conts = CONT_PIECES if cont_pieces is None else cont_pieces
-    vocab = sorted(p for p in (conts if cont else roots) if len(p) == width)
-    if not vocab:
-        return None
-    return piece.isin(*vocab)
 
 
 def wordpiece_word_stats(

@@ -24,6 +24,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """The local JVM heap: 32g, capped at half of physical memory so the
+    driver plus its Python workers fit on a smaller host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 << 10, phys // 2 >> 20)}m"
+
+
 # Applied at build time (static) — session-level tuning.
 _STATIC_CONF = {
     "spark.sql.session.timeZone": "UTC",
@@ -53,9 +61,13 @@ _STATIC_CONF = {
     "spark.ui.enabled": "false",
     # 1 GiB per local core (local mode = one JVM for driver AND all 32
     # executor threads; 8g total was 250 MB/core — a quarter of the
-    # leanest realistic executor, and the sf5 sweep's OOM source).
-    # Ignored when a cluster's spark-submit provides its own sizing.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    # leanest realistic executor, and the sf5 sweep's OOM source), but
+    # never more than half the host's RAM: a heap past physical memory
+    # gets the JVM killed mid-run. Ignored when a cluster's
+    # spark-submit provides its own sizing.
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()
+    ),
 }
 
 

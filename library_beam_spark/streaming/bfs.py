@@ -104,8 +104,7 @@ def bfs_stream_batches(
         if batch_id <= committed:
             return
         spark = _batch_session(batch)
-        from ..util import fold_verdict_pin as _pinc
-        from ..util import pin_observed_values
+        from ..util import pin_compact, pin_observed_values
 
         bucket = F.pmod(F.xxhash64(F.col("u"), F.col("v")), F.lit(n_buckets)).cast(
             "int"
@@ -113,9 +112,8 @@ def bfs_stream_batches(
         # pin the batch's distinct edge set BEFORE anything consumes
         # it: the store anti-join and (first batch) the seed/fixpoint
         # consumers all read one evaluation of the source read +
-        # distinct, and the touched-bucket set rides the pin's own
-        # materialization job via observe (guide §1.5/§2.4 — was a
-        # separate distinct-collect action per batch)
+        # distinct, and the touched-bucket set comes from one
+        # distinct-collect over the pinned blocks (guide §2.4)
         batch_edges, touched = pin_observed_values(
             batch.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct(),
             bucket,
@@ -124,7 +122,7 @@ def bfs_stream_batches(
         _window_batches(index_dir, "dist", base, committed)
         if committed >= 0:
             # delta dedup against the store, probing only the touched
-            # bucket dirs (the observed set — ≤ n_buckets ints)
+            # bucket dirs (the collected set — ≤ n_buckets ints)
             probe_dirs = [
                 d
                 for kk in window
@@ -152,7 +150,7 @@ def bfs_stream_batches(
             # derivation AND the edge-store write — unpinned, the source
             # read + distinct + bucket-pruned anti-join re-evaluate once
             # per consumer (guide §2.4)
-            new_edges = _pinc(new_edges)
+            new_edges = pin_compact(new_edges)
             # the relaxation input: the FULL cumulative edge set (the
             # frontier may reach any edge) — read, never rewritten
             edge_dirs = [

@@ -135,8 +135,8 @@ def cdc_stream_batches(
         # the eligible-chunk table feeds three consumers (coverage
         # join, per-doc totals, store growth) — pin it so the chunker
         # runs once per batch; the touched-bucket set (≤ n_buckets
-        # ints, never data-scale) rides the SAME materialization job
-        # via observe instead of a separate distinct-collect action
+        # ints, never data-scale) comes from one distinct-collect over
+        # the pinned blocks
         ch, touched = pin_observed_values(
             cdc_chunks(batch, k=k, mask_bits=mask_bits).filter(
                 F.col("n_tokens") >= min_tokens
@@ -177,49 +177,31 @@ def cdc_stream_batches(
             # table (guide §4: keep Python out of paths that carry no
             # Python work)
             store = ch.select("chunk_md5").limit(0)
-        from ..util import fold_verdict_pin as _vpin
+        from ..util import pin_compact
 
-        if os.environ.get("SPARK_GRAFT_CDC_SINGLE_PROBE", "1") != "0":
-            # SINGLE-PROBE form (guide §2.4): the window's store slice
-            # is chunk-UNIQUE by construction (every batch's delta is
-            # anti-joined against the whole probed window before it is
-            # written; compaction unions disjoint sets), so ONE flagged
-            # left join yields both the coverage verdict and the
-            # novelty set — the dual-probe form scanned the store slice
-            # twice per batch (semi join for coverage, anti join for
-            # the delta) and ran two aggregations plus a join where one
-            # conditional aggregation suffices. Pinned at chunk grain:
-            # every downstream consumer reads the one probe.
-            flagged = _vpin(
-                ch.join(
-                    store.withColumn("_hit", F.lit(True)), "chunk_md5", "left"
-                )
-            )
-            per_doc = flagged.groupBy("doc_id").agg(
-                F.sum("n_tokens").alias("n_tokens"),
-                F.sum(
-                    F.when(F.col("_hit"), F.col("n_tokens")).otherwise(F.lit(0))
-                ).alias("dup_tokens"),
-            )
-            new_chunk_src = flagged.filter(F.col("_hit").isNull())
-        else:
-            # dual-probe form (pre-r16) for A/B isolation
-            hit = ch.join(store, "chunk_md5", "semi").groupBy("doc_id").agg(
-                F.sum("n_tokens").alias("dup_tokens")
-            )
-            per_doc = (
-                ch.groupBy("doc_id")
-                .agg(F.sum("n_tokens").alias("n_tokens"))
-                .join(hit, "doc_id", "left")
-                .fillna({"dup_tokens": 0})
-            )
-            new_chunk_src = ch.join(store, "chunk_md5", "anti")
+        # ONE flagged left join yields both the coverage verdict and
+        # the novelty set, so the store slice is scanned once per batch
+        # (guide §2.4). Exact only because the window's store slice is
+        # chunk-UNIQUE by construction: every batch's delta is
+        # anti-joined against the whole probed window before it is
+        # written, and compaction unions disjoint sets. Pinned at chunk
+        # grain: every downstream consumer reads the one probe.
+        flagged = pin_compact(
+            ch.join(store.withColumn("_hit", F.lit(True)), "chunk_md5", "left")
+        )
+        per_doc = flagged.groupBy("doc_id").agg(
+            F.sum("n_tokens").alias("n_tokens"),
+            F.sum(
+                F.when(F.col("_hit"), F.col("n_tokens")).otherwise(F.lit(0))
+            ).alias("dup_tokens"),
+        )
+        new_chunk_src = flagged.filter(F.col("_hit").isNull())
         # pin the doc-grain admission verdict (tiny — one row per batch
         # doc): it feeds BOTH state writes below, and without the pin
         # each write action re-evaluates the whole probe chain (guide
         # §2.4: don't recompute what one pass can produce; §5: reuse
         # only pays when recomputing costs more)
-        admitted_now = _vpin(
+        admitted_now = pin_compact(
             per_doc.filter(
                 F.col("dup_tokens") * F.lit(1_000_000)
                 <= F.lit(int(max_dup_ppm)) * F.col("n_tokens")
@@ -436,9 +418,9 @@ def cdc_stream_batches_with_deletes(
                     ]
                 ).withColumn("_new", F.lit(False))
             )
-        from ..util import fold_verdict_pin as _vpin
+        from ..util import pin_compact
 
-        tombs_pinned = _vpin(
+        tombs_pinned = pin_compact(
             tomb_union.groupBy("doc_id").agg(F.max("_new").alias("_new"))
         )
         all_tombs = tombs_pinned.select("doc_id")
@@ -448,9 +430,8 @@ def cdc_stream_batches_with_deletes(
             .drop(deleted_col)
             .join(dels, "doc_id", "anti")
         )
-        # the eligible-chunk pin carries the touched-bucket observation
-        # on its own materialization job (guide §1.5/§2.4 — was a
-        # separate distinct-collect action per batch)
+        # pin the eligible-chunk table; the touched-bucket set comes
+        # from one distinct-collect over the pinned blocks
         ch, touched = pin_observed_values(
             cdc_chunks(inserts, k=k, mask_bits=mask_bits).filter(
                 F.col("n_tokens") >= min_tokens
@@ -501,9 +482,7 @@ def cdc_stream_batches_with_deletes(
         # both state writes, and unpinned each write re-evaluates the
         # whole probe chain (tomb-filtered store read + semi join + two
         # aggregations) per action
-        from ..util import fold_verdict_pin as _vpin
-
-        admitted_now = _vpin(
+        admitted_now = pin_compact(
             per_doc.filter(
                 F.col("dup_tokens") * F.lit(1_000_000)
                 <= F.lit(int(max_dup_ppm)) * F.col("n_tokens")

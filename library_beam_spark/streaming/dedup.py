@@ -156,8 +156,6 @@ def _batch_session(batch: DataFrame):
     ``shuffle.partitions`` slivers per batch — the small-files bound the
     append-only layout wants at every scale."""
     spark = batch.sparkSession
-    if os.environ.get("SPARK_GRAFT_FOLD_AQE", "1") == "0":
-        return spark  # measurement escape hatch: keep the engine's AQE-off clone
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -455,7 +453,7 @@ def lsh_dedup_batches(
                 # feeds the bucket pruning AND the hits join — pin so
                 # the band join runs once (no persist leak to callers);
                 # the signature-bucket set (bucket VALUES, never ids)
-                # rides the pin's own materialization job via observe
+                # comes from one distinct-collect over the pinned blocks
                 hpairs, sig_touched = pin_observed_values(
                     hpairs, _sig_bucket(F.col("_other"))
                 )
@@ -501,9 +499,9 @@ def lsh_dedup_batches(
         # LSH chain — within-batch collide self-join, history band join
         # and the signature-confirm joins — once per consumer (guide
         # §2.4: don't recompute what one pass can produce)
-        from ..util import fold_verdict_pin as _vpin
+        from ..util import pin_compact
 
-        drop = _vpin(drop)
+        drop = pin_compact(drop)
         # band index always labels its id column "doc_id"; the batch
         # keeps the caller's id_col name
         survivors = batch.join(
@@ -681,7 +679,6 @@ def lsh_dedup_batches_with_deletes(
         if batch_id <= committed:
             return
         spark = _batch_session(batch)
-        from ..util import fold_verdict_pin as _vpin
         from ..util import pin_compact as pin
         from ..util import pin_observed_values
 
@@ -716,7 +713,7 @@ def lsh_dedup_batches_with_deletes(
                     ]
                 ).withColumn("_new", F.lit(False))
             )
-        tombs_pinned = _vpin(
+        tombs_pinned = pin(
             tomb_union.groupBy("doc_id").agg(F.max("_new").alias("_new"))
         )
         all_tombs = tombs_pinned.select("doc_id")
@@ -727,8 +724,8 @@ def lsh_dedup_batches_with_deletes(
             .drop(deleted_col)
             .join(dels.withColumnRenamed("doc_id", id_col), id_col, "anti")
         )
-        # the band-index pin carries the touched-bucket observation on
-        # its own materialization job (was a separate collect action)
+        # pin the band index; the touched-bucket set comes from one
+        # distinct-collect over the pinned blocks
         bi, touched = pin_observed_values(
             minhash_band_index(inserts, id_col, text_col, num_hashes, bands, n),
             _band_bucket(F.col("band"), F.col("band_hash")),
@@ -747,7 +744,7 @@ def lsh_dedup_batches_with_deletes(
             .distinct()
         )
         # structural partition pruning: only the bucket dirs this
-        # batch's own band hashes touch (the observed set above),
+        # batch's own band hashes touch (the collected set above),
         # anti-joined against the live tombstone set — the retraction
         # taking effect at probe time, before compaction physically
         # absorbs it
@@ -779,9 +776,7 @@ def lsh_dedup_batches_with_deletes(
         # pin the doc-grain drop verdict: it feeds the survivors pin AND
         # the fresh-bands anti-join — unpinned, the collide self-join +
         # tomb-filtered history probe re-evaluate once per consumer
-        from ..util import fold_verdict_pin as _vpin
-
-        drop = _vpin(drop)
+        drop = pin(drop)
         survivors = pin(
             inserts.join(
                 drop.withColumnRenamed("doc_id", id_col), id_col, "anti"

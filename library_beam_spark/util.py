@@ -84,14 +84,7 @@ def graph_prepartition(df: "DataFrame", key: str) -> "DataFrame":
     explicit exchange at build time buys zero edge exchanges per round;
     AQE still picks the partition count (RepartitionByExpression with no
     explicit numPartitions is AQE-coalescible), so the width stays
-    data-proportional at any scale.
-
-    ``SPARK_GRAFT_GRAPH_PREPART=0`` is the measurement escape hatch
-    (skip the repartition — the pre-r15 layout) for A/B harnesses."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_GRAPH_PREPART", "1") == "0":
-        return df
+    data-proportional at any scale."""
     return df.repartition(F.col(key))
 
 
@@ -259,6 +252,13 @@ def stream_state_partitions(spark, *source_dirs: str) -> int:
             stacklevel=2,
         )
         return cap
+    return max(1, min(cap, -(-n_bytes // _advisory_bytes(spark))))
+
+
+def _advisory_bytes(spark) -> int:
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes —
+    a plain byte count or a ``k``/``m``/``g`` size string, with or
+    without a trailing ``b``."""
     raw = spark.conf.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"
     ).lower().strip()
@@ -267,8 +267,7 @@ def stream_state_partitions(spark, *source_dirs: str) -> int:
         if digits.endswith(suffix):
             mult, digits = m, digits[:-1]
             break
-    advisory = max(1, int(digits) * mult)
-    return max(1, min(cap, -(-n_bytes // advisory)))
+    return max(1, int(digits) * mult)
 
 
 def local_df(spark, rows: list, schema) -> DataFrame:
@@ -364,13 +363,8 @@ def pin_compact(df: DataFrame, advisory_bytes: int | None = None) -> DataFrame:
 
     Use ONLY where downstream work per row is cheap (probes, joins,
     aggregations) and partition identity carries no semantics (no
-    spark_partition_id consumers).
-
-    ``SPARK_GRAFT_PIN_COMPACT=0`` is the measurement escape hatch
-    (plain :func:`pin`, no coalesce) — the SPARK_GRAFT_FOLD_AQE
-    pattern, so A/B harnesses can isolate this coalesce's effect."""
-    if os.environ.get("SPARK_GRAFT_PIN_COMPACT", "1") == "0":
-        return pin(df)
+    spark_partition_id consumers), e.g. a fold step's per-batch
+    verdict table that feeds 2-3 state-write actions (guide §2.4)."""
     out = pin(df)
     if out is df:  # SPARK_GRAFT_LAZY_PLANS: nothing materialized
         return out
@@ -387,15 +381,7 @@ def pin_compact(df: DataFrame, advisory_bytes: int | None = None) -> DataFrame:
         if n_bytes is None:
             return out
         if advisory_bytes is None:
-            raw = spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"
-            ).lower().strip()
-            mult, digits = 1, raw.removesuffix("b")
-            for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-                if digits.endswith(suffix):
-                    mult, digits = m, digits[:-1]
-                    break
-            advisory_bytes = max(1, int(digits) * mult)
+            advisory_bytes = _advisory_bytes(spark)
         k = max(1, -(-n_bytes // advisory_bytes))
         if n_parts and k < n_parts:
             return out.coalesce(int(k))
@@ -404,56 +390,12 @@ def pin_compact(df: DataFrame, advisory_bytes: int | None = None) -> DataFrame:
     return out
 
 
-def fold_verdict_pin(df: DataFrame) -> DataFrame:
-    """:func:`pin_compact` for a fold step's per-batch DECISION table
-    (admission verdicts, drop sets, novel-edge deltas — O(batch) rows):
-    these feed 2-3 state-write actions, and unpinned each action
-    re-evaluates the whole probe/collide chain (guide §2.4).
-
-    ``SPARK_GRAFT_FOLD_VERDICT_PIN=0`` is the measurement escape hatch
-    (lazy, the pre-r15 recompute-per-action shape) for A/B harnesses —
-    the SPARK_GRAFT_FOLD_AQE pattern."""
-    if os.environ.get("SPARK_GRAFT_FOLD_VERDICT_PIN", "1") == "0":
-        return df
-    return pin_compact(df)
-
-
 def pin_observed_values(df: DataFrame, col: Column) -> tuple[DataFrame, list]:
-    """:func:`fold_verdict_pin` + the distinct values of ``col`` — the
+    """:func:`pin_compact` + the distinct values of ``col`` — the
     bounded bucket/shard set a fold needs before it can prune its state
-    probe (never data-scale). Default path: pin, then one distinct-
-    collect over the pinned blocks (a ~single-task job).
-
-    ``SPARK_GRAFT_OBSERVED_PIN=1`` switches to a ``DataFrame.observe``
-    ride on the pin's own materialization job — zero extra actions on
-    paper, but MEASURED par-to-worse here (interleaved A/B,
-    stream_cdc_with_deletes 19.9 vs 15.2 s med, the observe arm losing
-    the same passes it shares with the collect arm): ``Observation.get``
-    waits on the async QueryExecutionListener bus, which under a busy
-    micro-batch engine lags the finished job by whole seconds — more
-    than the ~100 ms collect job it saves. Kept opt-in for quiet-driver
-    deployments; the collect path is the measured default (guide §1.6:
-    the final re-measure decides, not the theory). Also falls back to
-    the collect when pinning is hatched off (no eager action fires, so
-    the observation would block forever)."""
-    if (
-        os.environ.get("SPARK_GRAFT_OBSERVED_PIN", "0") == "1"
-        and os.environ.get("SPARK_GRAFT_FOLD_VERDICT_PIN", "1") != "0"
-        and not os.environ.get("SPARK_GRAFT_LAZY_PLANS")
-    ):
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        pinned = pin_compact(df.observe(obs, F.collect_set(col).alias("vals")))
-        try:
-            vals = sorted(obs.get["vals"])
-        except Exception:
-            vals = sorted(
-                r["v"]
-                for r in pinned.select(col.alias("v")).distinct().collect()
-            )
-        return pinned, vals
-    out = fold_verdict_pin(df)
+    probe (never data-scale): pin, then one distinct-collect over the
+    pinned blocks (a ~single-task job)."""
+    out = pin_compact(df)
     vals = sorted(
         r["v"] for r in out.select(col.alias("v")).distinct().collect()
     )

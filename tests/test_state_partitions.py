@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from library_beam_spark.util import (
+    _advisory_bytes,
     pin_compact,
     stage_stream_splits,
     stream_state_partitions,
@@ -72,6 +73,25 @@ def test_one_unsizable_source_poisons_the_sum(spark, tmp_path):
 def test_env_override_wins(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "7")
     assert stream_state_partitions(spark, "s3a://irrelevant/x") == 7
+
+
+@pytest.mark.parametrize(
+    "raw, expected",
+    [
+        ("67108864", 64 << 20),
+        ("64m", 64 << 20),
+        ("64mb", 64 << 20),
+        ("512k", 512 << 10),
+        ("1g", 1 << 30),
+    ],
+)
+def test_advisory_size_parses_byte_strings(spark, raw, expected):
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, raw)
+    try:
+        assert _advisory_bytes(spark) == expected
+    finally:
+        spark.conf.unset(key)
 
 
 def test_pin_compact_introspection_resolves(spark):

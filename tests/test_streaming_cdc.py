@@ -226,3 +226,60 @@ def test_compaction_writes_window_state_once_and_gcs(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(idx, "store"))) == ["batch=3"]
     assert sorted(os.listdir(os.path.join(idx, "admitted"))) == ["batch=3"]
     assert set(_adm(spark, idx)) == {1, 2, 3, 4}
+
+
+@pytest.mark.parametrize("deletes", [False, True], ids=["base", "with_deletes"])
+def test_live_store_window_stays_key_unique(spark, tmp_path, deletes):
+    """The base fold answers coverage and novelty with ONE left join
+    against the probed store slice, which is exact only while that
+    slice is chunk-unique (a duplicated chunk row would duplicate the
+    joined chunk and inflate dup_tokens). Pin the invariant across a
+    re-crawl overlap, partially overlapping admitted docs and a
+    ``compact_every`` fold. The tombstone-aware store is doc-grain, so
+    its key is (doc_id, chunk_md5)."""
+    from pyspark.sql import functions as F
+
+    from library_beam_spark.streaming.cdc import (
+        cdc_deletes_admitted,
+        cdc_stream_batches_with_deletes,
+    )
+
+    idx = str(tmp_path / "i")
+    if deletes:
+        step = cdc_stream_batches_with_deletes(idx, compact_every=2)
+        admitted, key = cdc_deletes_admitted, ["doc_id", "chunk_md5"]
+
+        def batch(rows):
+            return spark.createDataFrame(
+                [(d, t, False) for d, t in rows],
+                "doc_id long, text string, is_deleted boolean",
+            )
+    else:
+        step = cdc_stream_batches(idx, compact_every=2)
+        admitted, key = cdc_admitted, ["chunk_md5"]
+
+        def batch(rows):
+            return _df(spark, rows)
+
+    novel = " ".join(f"m{(11 * j) % 307}" for j in range(300))
+    half_base = " ".join(BASE.split()[:90])
+    half_fresh = " ".join(FRESH.split()[:90])
+    step(batch([(1, BASE)]), 0)
+    # a re-crawl (rejected) next to fresh content (admitted) that
+    # repeats itself, so its own chunks occur twice
+    step(batch([(2, "tiny new intro words " + BASE), (3, FRESH + " " + FRESH)]), 1)
+    # compacts; doc 4 shares chunks with doc 1 but is mostly new
+    step(batch([(4, half_base + " " + novel)]), 2)
+    # a plain delta batch after the compaction, overlapping doc 3
+    step(batch([(5, half_fresh + " " + novel.replace("m", "p"))]), 3)
+    got = {r.doc_id: r.dup_tokens for r in admitted(spark, idx).collect()}
+    assert set(got) == {1, 3, 4, 5}
+    assert got[4] > 0 and got[5] > 0, "overlapping docs must hit the store"
+    store_root = os.path.join(idx, "store")
+    assert sorted(os.listdir(store_root)) == ["batch=2", "batch=3"]
+    store = spark.read.option("basePath", store_root).parquet(
+        *[os.path.join(store_root, f"batch={b}") for b in (2, 3)]
+    )
+    n, n_keys = store.agg(F.count(F.lit(1)), F.countDistinct(*key)).first()
+    assert n > 0
+    assert n == n_keys, f"{n - n_keys} duplicate {key} rows in the live store"
